@@ -6,7 +6,11 @@ Local testing runs on ``local[N]`` but every knob is chosen for the
 - AQE on (runtime coalescing + skew-join splitting),
 - Arrow on (all pandas-UDF transforms batch through Arrow),
 - shuffle partitions sized to cores locally; on a real cluster this is
-  ``2-3x total executor cores`` and AQE coalesces down.
+  ``2-3x total executor cores`` and AQE coalesces down,
+- file listing on the driver, never as a Spark job: every multi-file
+  read in the engine names its files from a manifest, so the default
+  (a one-task-per-path listing job above 32 paths) only re-stats what
+  the manifest already lists.
 """
 
 from __future__ import annotations
@@ -74,6 +78,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -28,8 +28,9 @@ Replay of any subset of batches in any order reconverges to the same
 final state.
 
 Schema evolution is additive and metadata-driven: new payload columns
-widen the manifest schema; existing rows read back as null
-(mergeSchema); batches missing known columns are null-filled. Swapping
+widen the manifest schema; every scan reads its files under that
+schema, so existing rows read back null in columns their files predate;
+batches missing known columns are null-filled. Swapping
 this class for an Iceberg catalog table keeps every caller unchanged —
 ``merge`` maps to ``MERGE INTO`` + snapshot properties, ``read`` to a
 snapshot scan.
@@ -57,6 +58,23 @@ ENVELOPE_COLS = ["op", "lsn", "offset", "partition", "ts"]
 #: and are never LWW-resolved. Refusing the mismatch turns silent
 #: duplicate keys into a loud error.
 BUCKET_HASH = "murmur3-pmod"
+
+
+def _written_buckets(out_dir: str) -> list[int]:
+    """Bucket ids a ``partitionBy("_bucket")`` write produced under
+    ``out_dir``, ascending."""
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(out_dir) if d.startswith("_bucket=")
+    )
+
+
+def _bucket_files(out_dir: str, bucket: int) -> list[str]:
+    """Parquet files one commit wrote for ``bucket`` under ``out_dir``
+    (empty when the write produced no rows for it)."""
+    bdir = os.path.join(out_dir, f"_bucket={bucket}")
+    if not os.path.isdir(bdir):
+        return []
+    return [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -117,6 +135,7 @@ class LakehouseTable:
                     {
                         "version": 0,
                         "key_col": key_col,
+                        "key_type": None,  # DDL type, recorded at the first merge
                         "n_buckets": n_buckets,
                         "mode": mode,
                         "bucket_hash": BUCKET_HASH,
@@ -303,20 +322,21 @@ class LakehouseTable:
         return os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
 
     def _full_schema_ddl(self, man: dict) -> str:
-        cols = [f"`{self.key_col}` string"]
+        # manifests predating the key_type field were written by string-
+        # keyed callers; an empty table reads as string too
+        cols = [f"`{self.key_col}` {man.get('key_type') or 'string'}"]
         cols += [f"`{n}` {t}" for n, t in man["payload_schema"]]
         cols += ["`_lsn` bigint", "`_offset` bigint", "`_deleted` boolean"]
         return ", ".join(cols)
 
     def _read_files(self, man: dict, files: list[str]) -> DataFrame:
+        """Scan ``files`` under the manifest's schema: no footer job to
+        infer or merge schemas, and the parquet reader returns null for
+        columns a file predates (additive evolution)."""
         schema = StructType.fromDDL(self._full_schema_ddl(man))
         if not files:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option("mergeSchema", True).parquet(*files)
-        # null-fill columns added after these files were written
-        missing = {f.name: f.dataType for f in schema.fields if f.name not in df.columns}
-        for name, dtype in missing.items():
-            df = df.withColumn(name, F.lit(None).cast(dtype))
+        df = self.spark.read.schema(schema).parquet(*files)
         return df.select(*[f.name for f in schema.fields])
 
     def _resolve(self, df: DataFrame) -> DataFrame:
@@ -372,10 +392,10 @@ class LakehouseTable:
         ]
         # additive schema evolution: append never-seen payload columns.
         # A KNOWN column arriving with a DIFFERENT type is rejected
-        # loudly: writing it as-is would commit mixed-type files that
-        # poison every later mergeSchema read ("Failed to merge
-        # incompatible data types") after the bad batch is already
-        # durable — evolution here is additive, never type-changing.
+        # loudly: writing it as-is would commit files that every later
+        # scan under the manifest schema fails to decode, after the bad
+        # batch is already durable — evolution here is additive, never
+        # type-changing.
         known = dict(man["payload_schema"])
         chg_types = dict(changes.dtypes)
         new_schema = list(man["payload_schema"])
@@ -391,6 +411,15 @@ class LakehouseTable:
                 )
         man["payload_schema"] = new_schema
         target_payload = [n for n, _ in new_schema]
+        # the key's type is recorded by the first merge (reads scan under
+        # it) and, like a payload column's, never changes afterwards
+        key_type = man.get("key_type") or chg_types[self.key_col]
+        if chg_types[self.key_col] != key_type:
+            raise ValueError(
+                f"key column {self.key_col!r} arrives as "
+                f"{chg_types[self.key_col]} but the table records {key_type}"
+            )
+        man["key_type"] = key_type
 
         chg = changes.withColumn("_bucket", self._bucket(F.col(self.key_col)))
         chg = (
@@ -463,20 +492,11 @@ class LakehouseTable:
             .parquet(out_dir)
         )
         if touched is None:
-            touched = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out_dir)
-                if d.startswith("_bucket=")
-            )
+            touched = _written_buckets(out_dir)
 
         new_buckets = dict(man["buckets"])
         for b in touched:
-            bdir = os.path.join(out_dir, f"_bucket={b}")
-            files = (
-                [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
-                if os.path.isdir(bdir)
-                else []
-            )
+            files = _bucket_files(out_dir, b)
             if self.mode == "mor":
                 # append the delta; existing base/delta files stay live
                 new_buckets[str(b)] = new_buckets.get(str(b), []) + files
@@ -567,13 +587,7 @@ class LakehouseTable:
             version = max(man["version"], self._current_version()) + 1
             new_buckets = dict(man["buckets"])
             for b in touched:
-                bdir = os.path.join(out_dir, f"_bucket={b}")
-                files = (
-                    [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
-                    if os.path.isdir(bdir)
-                    else []
-                )
-                new_buckets[str(b)] = new_buckets.get(str(b), []) + files
+                new_buckets[str(b)] = new_buckets.get(str(b), []) + _bucket_files(out_dir, b)
             man["buckets"] = new_buckets
             for p, o in offsets.items():
                 k = str(p)
@@ -615,16 +629,9 @@ class LakehouseTable:
             .mode("overwrite")
             .parquet(out_dir)
         )
-        new_buckets: dict[str, list[str]] = {}
-        for d in os.listdir(out_dir):
-            if not d.startswith("_bucket="):
-                continue
-            b = d.split("=", 1)[1]
-            bdir = os.path.join(out_dir, d)
-            new_buckets[b] = [
-                os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")
-            ]
-        man["buckets"] = new_buckets
+        man["buckets"] = {
+            str(b): _bucket_files(out_dir, b) for b in _written_buckets(out_dir)
+        }
         man["history"] = (
             man["history"] + [{"batch": label, "version": version, "lineage": {}}]
         )[-100:]

@@ -12,6 +12,7 @@ from etl_rs_spark.operators.normalize_cdc import (
     normalize_events,
     normalize_events_pandas,
 )
+from etl_rs_spark.session import force
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events, write_segments
 from etl_rs_spark.streaming.replay import (
@@ -564,8 +565,9 @@ def test_mor_schema_evolution_in_delta(spark, tmp_path):
     """A new payload column arriving in a LATER MOR delta must widen the
     table additively: older base/delta files read back null-filled, and
     read-time LWW resolves across the mixed schemas."""
+    # 200 docs over 800 events: some docs' last event predates the tag
     spec = BinlogSpec(
-        n_events=800, n_docs=60, n_partitions=4, vocab=VOCAB,
+        n_events=800, n_docs=200, n_partitions=4, vocab=VOCAB,
         tokens_max=10, evolve_from_lsn=401, seed=13,
     )
     df = gen_events(spark, spec)
@@ -574,9 +576,12 @@ def test_mor_schema_evolution_in_delta(spark, tmp_path):
                           drop_tag_before_evolve=spec.evolve_from_lsn)
     assert "tag" not in spark.read.parquet(segs[0]).columns
 
+    # the mapping evolves when the tag column first arrives, so the
+    # first delta's files have no tag column at all
     mapping = ColumnMapping.base().evolved(MappedColumn("tag", "tag", "string"))
     table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
-    replay_segments(spark, table, segs, mapping=mapping, cfg=CFG)
+    replay_segments(spark, table, segs[:1], cfg=CFG)
+    replay_segments(spark, table, segs[1:], mapping=mapping, cfg=CFG)
 
     events = [r.asDict() for r in df.collect()]
     for e in events:
@@ -589,6 +594,79 @@ def test_mor_schema_evolution_in_delta(spark, tmp_path):
     # compaction folds mixed-schema deltas without losing the new column
     table.compact()
     assert table_state(table.read(), with_tag=True) == want
+    # rows whose winning event predates the column read back NULL tags
+    pre_rows = table.read(include_meta=True).filter(
+        F.col("_lsn") < spec.evolve_from_lsn
+    )
+    assert pre_rows.count() > 0
+    assert pre_rows.filter(F.col("tag").isNotNull()).count() == 0
+
+    # the pre-evolution snapshot still reads under its own schema
+    pre = table.read(version=1)
+    assert pre.columns == ["doc_id", "tokens", "n_tok", "source"]
+    first = [e for e in events if e["lsn"] < spec.evolve_from_lsn]
+    assert table_state(pre) == oracle_replay(first, VOCAB, MAX_LEN)
+
+
+def test_mor_long_key_reads_and_compacts(spark, tmp_path):
+    """A table keyed on a bigint column records the key type at its
+    first merge and scans under it: MOR reads and compaction keep the
+    key a bigint and return the LWW rows."""
+    table = LakehouseTable(spark, str(tmp_path / "t"), key_col="id", n_buckets=4, mode="mor")
+    schema = "id bigint, op string, lsn bigint, offset bigint, v string"
+    batches = [
+        [(1, "insert", 1, 0, "a"), (2, "insert", 2, 1, "b"), (3, "insert", 3, 2, "c")],
+        [(2, "update", 4, 3, "b2"), (3, "delete", 5, 4, None), (4, "insert", 6, 5, "d")],
+    ]
+    for i, rows in enumerate(batches):
+        table.merge(spark.createDataFrame(rows, schema), f"b{i}")
+    assert table.manifest()["key_type"] == "bigint"
+
+    want = {(1, "a"), (2, "b2"), (4, "d")}
+    assert {(r.id, r.v) for r in table.read().collect()} == want
+    table.compact()
+    df = table.read()
+    assert dict(df.dtypes)["id"] == "bigint"
+    assert {(r.id, r.v) for r in df.collect()} == want
+
+
+def _forced_read_jobs(spark, table, group: str) -> int:
+    """Spark jobs one forced ``read()`` of ``table`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "forced read")
+    try:
+        force(table.read())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_read_jobs_do_not_grow_with_live_files(spark, tmp_path):
+    """A MOR read names its files from the manifest and scans them under
+    the manifest schema: it runs no schema-inference job and no listing
+    job, even past Spark's 32-path parallel-listing threshold, so a read
+    of 48 delta files runs as many jobs as a read of the 16 compacted
+    bases."""
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=16, mode="mor")
+    for i in range(3):
+        # one task writes the batch: one file per bucket per commit
+        chg = spark.range(i * 200, (i + 1) * 200, numPartitions=1).select(
+            F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+            F.lit("insert").alias("op"),
+            F.col("id").alias("lsn"),
+            F.col("id").alias("offset"),
+            F.col("id").cast("int").alias("n"),
+        )
+        table.merge(chg, f"b{i}")
+    n_files = sum(len(fl) for fl in table.manifest()["buckets"].values())
+    assert n_files > 32
+
+    before = _forced_read_jobs(spark, table, "read-deltas")
+    table.compact()
+    assert sum(len(fl) for fl in table.manifest()["buckets"].values()) == 16
+    after = _forced_read_jobs(spark, table, "read-compacted")
+    assert table.read().count() == 600
+    assert before == after
 
 
 def test_lakehouse_refuses_foreign_bucket_hash(spark, tmp_path):
@@ -689,9 +767,10 @@ def test_reopen_adopts_manifest_layout(spark, tmp_path, binlog, oracle_state):
 
 
 def test_merge_rejects_type_changing_evolution(spark, tmp_path):
-    """A known payload column arriving with a different type is refused
-    before anything is written — mixed-type files would poison every
-    later mergeSchema read after the batch is already durable."""
+    """A known payload column, or the key, arriving with a different type
+    is refused before anything is written — files of another type would
+    fail every later scan under the manifest schema after the batch is
+    already durable."""
     t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=2)
     base = spark.createDataFrame(
         [("d1", "insert", 1, 1, 5)], "doc_id string, op string, lsn long, offset long, x int"
@@ -702,7 +781,12 @@ def test_merge_rejects_type_changing_evolution(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="additive evolution"):
         t.merge(bad, "b2")
-    assert not t.is_committed("b2")  # nothing durable from the bad batch
+    bad_key = spark.createDataFrame(
+        [(2, "insert", 2, 2, 6)], "doc_id long, op string, lsn long, offset long, x int"
+    )
+    with pytest.raises(ValueError, match="key column"):
+        t.merge(bad_key, "b2")
+    assert not t.is_committed("b2")  # nothing durable from the bad batches
     assert [r["x"] for r in t.read().collect()] == [5]
 
 
